@@ -27,7 +27,7 @@ newline-sensitive Java ``$``):
 3. No ``scheme://`` prefix -> PASSTHROUGH of the trimmed, fragment-less
    string (mailto:, relative paths, garbage: not this function's job).
 4. Scheme lowercased. Authority: userinfo stripped through the LAST
-   ``@`` (``^[\s\S]*@`` greedy — the WHATWG rule; a first-@ strip is
+   ``@`` (``^[\\s\\S]*@`` greedy — the WHATWG rule; a first-@ strip is
    not idempotent when garbage authorities carry more ``@``s), host
    lowercased, then ONE trailing-run strip per scheme: for http/https
    the run of MIXED default-port and dot tokens (``((:80)|\\.)+`` /

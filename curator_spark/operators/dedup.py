@@ -1176,6 +1176,13 @@ def decontaminate(
     fraction of the corpus, so the count-per-doc aggregation and the
     join back onto ``docs`` shuffle almost nothing (AQE turns the final
     join into a broadcast when the contaminated-id set is small).
+
+    Key precondition: ``key`` is non-NULL and unique. A NULL key never
+    matches the hit set in the anti/left join, so a contaminated row would
+    survive drop mode and read as clean in flag mode; it raises instead,
+    inside the plan (no extra job). Rows sharing a key share one verdict
+    — uniqueness is the caller's contract, not checked (that would cost a
+    shuffle of the corpus).
     """
     if mode not in ("drop", "flag"):
         raise ValueError(f"mode must be 'drop' or 'flag', got {mode!r}")
@@ -1188,6 +1195,13 @@ def decontaminate(
                 f"decontaminate(mode='flag') adds columns {sorted(clash)} "
                 "which already exist on the input — rename them first"
             )
+    docs = docs.withColumn(
+        key,
+        F.coalesce(
+            F.col(key),
+            F.raise_error(F.lit(f"decontaminate: NULL {key!r} key; keys must be non-NULL")),
+        ),
+    )
     ctc = cont_text_col if cont_text_col is not None else text_col
     cont_grams = (
         _hashed_positioned_shingles120(

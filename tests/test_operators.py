@@ -1352,6 +1352,24 @@ def test_decontaminate_flag_guards_reserved_output_names(spark):
     ).columns == ["doc_id", "text", "n_hits"]
 
 
+@pytest.mark.parametrize("mode", ["drop", "flag"])
+def test_decontaminate_rejects_null_keys(spark, mode):
+    """A NULL key never matches the hit set in the anti/left join, so a
+    contaminated row with a NULL key would survive drop mode (and read as
+    clean in flag mode): decontaminate must raise instead."""
+    quote = "the quick brown fox jumps over the lazy dog"
+    docs = spark.createDataFrame(
+        [(None, quote), (1, "an unrelated clean document"), (2, quote)],
+        "doc_id long, text string",
+    )
+    cont = spark.createDataFrame([(0, quote)], "doc_id long, text string")
+    with pytest.raises(Exception, match="NULL 'doc_id' key"):
+        dedup.decontaminate(docs, cont, w=3, mode=mode).collect()
+    # non-NULL keys pass the guard untouched
+    kept = dedup.decontaminate(docs.filter("doc_id IS NOT NULL"), cont, w=3, mode="drop")
+    assert [r.doc_id for r in kept.collect()] == [1]
+
+
 def test_decontaminate_matches_python_model_on_random_corpora(spark):
     """Randomized adversarial check of decontaminate: 10 seeded corpora
     with TINY vocabularies (dense overlap between docs and contaminants,

@@ -154,17 +154,18 @@ def test_retry_commits_metrics_exactly_once(spark, pages_path, tmp_path, monkeyp
     """A retry after partial promotion must not re-promote or double-count
     committed chunks: exactly one metrics row per chunk, exact totals."""
     calls = {"n": 0}
-    real = R._chunk_metrics
+    real = R._commit_chunk_metrics
 
-    def flaky(out, run_id, chunk, wall_ms):
+    def flaky(*args, **kw):
         calls["n"] += 1
         if calls["n"] == 2:  # fail while committing the 2nd chunk
             raise RuntimeError("injected metrics failure")
-        return real(out, run_id, chunk, wall_ms)
+        return real(*args, **kw)
 
-    monkeypatch.setattr(R, "_chunk_metrics", flaky)
+    monkeypatch.setattr(R, "_commit_chunk_metrics", flaky)
     cfg = _config(pages_path, tmp_path / "outr")
     res = R.run_quality_filter(spark, cfg)
+    assert calls["n"] >= 2, "the injected failure never fired"
     assert res.chunks_run == 4
     metrics = R.read_table(spark, cfg.output_root, "metrics").toPandas()
     assert len(metrics) == 4
@@ -330,3 +331,141 @@ def test_incremental_run(spark, tmp_path, golden):
     summary = metrics_summary(spark, out_root, res2.run_id).collect()[0]
     assert summary.docs_seen == len(golden)
     assert summary.docs_kept == int(golden["keep"].sum())
+    # the merge writes' observed counters equal a rescan of the merged chunks
+    metrics = R.read_table(spark, out_root, "metrics").toPandas()
+    assert _metric_counts(metrics[metrics["run_id"] == res2.run_id]) == _rescan_counts(
+        spark, res2.run_dir
+    )
+
+
+def _rescan_counts(spark, run_dir) -> dict:
+    """The counters recomputed by re-reading a run's committed output,
+    grouped by its ``chunk=c`` directories — written out independently of
+    the runner's observed definition."""
+    from pyspark.sql import functions as F
+
+    out = spark.read.option("basePath", run_dir).parquet(os.path.join(run_dir, "chunk=*"))
+    aggs = [
+        F.count("*").alias("docs_seen"),
+        F.sum(F.col("keep").cast("long")).alias("docs_kept"),
+        F.sum((~F.col("keep")).cast("long")).alias("docs_dropped"),
+        F.sum((F.size("drop_rules") > 0).cast("long")).alias("docs_flagged"),
+        F.sum(F.col("error").isNotNull().cast("long")).alias("docs_failed"),
+    ]
+    aggs += [
+        F.sum(F.array_contains("drop_rules", r).cast("long")).alias(f"drops_{r}")
+        for r in R._rules_mod.RULE_NAMES
+    ]
+    aggs += [F.sum(F.col(f"scrub_{s}")).alias(f"scrubs_{s}") for s in R._SCRUB_RULES]
+    return {r["chunk"]: {k: v for k, v in r.asDict().items() if k != "chunk"}
+            for r in out.groupBy("chunk").agg(*aggs).collect()}
+
+
+def _metric_counts(metrics) -> dict:
+    cols = [c for c in metrics.columns if c.startswith(("docs_", "drops_", "scrubs_"))]
+    return {int(r["chunk"]): {c: int(r[c]) for c in cols} for _, r in metrics.iterrows()}
+
+
+@pytest.mark.parametrize("repartition_to", [None, 16])
+def test_observed_counters_match_rescan(spark, pages_path, tmp_path, monkeypatch, repartition_to):
+    """The counters observed on the chunk write equal a groupBy(chunk)
+    rescan of the committed output, one metrics row per chunk; the observe
+    node sits above the last exchange (the write's result stage, where a
+    task retry cannot count a row twice); a clean run's quarantine reads
+    back empty with its full schema."""
+    observed = []
+    real = R._observe_counters
+
+    def spy(df, chunks, chunk):
+        got = real(df, chunks, chunk)
+        observed.append(got[0])
+        return got
+
+    monkeypatch.setattr(R, "_observe_counters", spy)
+    cfg = _config(pages_path, tmp_path / "outo", repartition_to=repartition_to)
+    res = R.run_quality_filter(spark, cfg)
+
+    metrics = R.read_table(spark, cfg.output_root, "metrics").toPandas()
+    assert "partition_id" not in metrics.columns
+    assert sorted(metrics["chunk"]) == [0, 1, 2, 3]
+    assert _metric_counts(metrics) == _rescan_counts(spark, res.run_dir)
+    assert metrics["docs_seen"].sum() == 500
+
+    (df,) = observed
+    tree = df._jdf.queryExecution().executedPlan().treeString().splitlines()
+    at = [i for i, line in enumerate(tree) if "CollectMetrics" in line]
+    exchanges = [i for i, line in enumerate(tree) if "Exchange" in line]
+    assert len(at) == 1, tree
+    if repartition_to:
+        assert exchanges, tree
+    assert all(i > at[0] for i in exchanges), "\n".join(tree)
+
+    failed = R.read_table(spark, cfg.output_root, "failed_rows")
+    assert failed.columns == ["url", "warc_ts", "error", "run_id", "chunk"]
+    assert dict(failed.dtypes)["warc_ts"] == "timestamp"
+    assert failed.count() == 0
+
+
+def test_fresh_run_jobs_do_not_grow_with_chunks(spark, pages_path, tmp_path, monkeypatch):
+    """The runner adds no per-chunk job: a fresh run launches as many Spark
+    jobs at num_chunks=1 as at num_chunks=4. Every job carries a
+    ``runner:<run_id>:<step>`` description, and the caller's description
+    is back in place afterwards."""
+    sc = spark.sparkContext
+    seen = []
+    real_set = type(sc).setJobDescription
+
+    def spy_set(self, value):
+        seen.append(value)
+        return real_set(self, value)
+
+    monkeypatch.setattr(type(sc), "setJobDescription", spy_set)
+    jobs = {}
+    try:
+        for n in (4, 1):
+            group = f"runner-jobs-{n}"
+            sc.setJobGroup(group, "caller")
+            cfg = R.RunConfig(input_path=pages_path, output_root=str(tmp_path / f"o{n}"),
+                              num_chunks=n)
+            res = R.run_quality_filter(spark, cfg)
+            assert res.chunks_run == n
+            assert sc.getLocalProperty("spark.job.description") == "caller"
+            jobs[n] = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs[1] == jobs[4] > 0, jobs
+    run_id = R.run_fingerprint(cfg)
+    assert {f"runner:{run_id}:read_input", f"runner:{run_id}:write"} <= set(seen), seen
+
+
+def test_empty_chunks_commit_readable_zero_rows(spark, pages_pdf, tmp_path):
+    """More chunks than input rows: every empty chunk still commits a
+    readable zero-row partition (data and quarantine, written from the
+    driver) and a metrics row of zeros."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from curator_spark.datagen import PAGES_SCHEMA
+
+    pdf = pages_pdf.iloc[:3]
+    src = tmp_path / "tiny"
+    src.mkdir()
+    pq.write_table(pa.Table.from_pandas(pdf, schema=PAGES_SCHEMA, preserve_index=False),
+                   str(src / "a.parquet"))
+    cfg = R.RunConfig(input_path=str(src), output_root=str(tmp_path / "oute"), num_chunks=8)
+    res = R.run_quality_filter(spark, cfg)
+    assert res.chunks_run == 8
+
+    out = R.load_output(spark, res)
+    assert sorted(r.url for r in out.select("url").collect()) == sorted(pdf["url"])
+    for c in range(8):  # each chunk dir reads back alone with the verdict schema
+        part = spark.read.parquet(os.path.join(res.run_dir, f"chunk={c}"))
+        assert [f.name for f in part.schema] == [f.name for f in out.schema]
+    metrics = R.read_table(spark, cfg.output_root, "metrics").toPandas()
+    assert sorted(metrics["chunk"]) == list(range(8))
+    assert metrics["docs_seen"].sum() == 3 and (metrics["docs_seen"] == 0).sum() >= 5
+    rescan = _rescan_counts(spark, res.run_dir)
+    zeros = dict.fromkeys(next(iter(rescan.values())), 0)
+    assert _metric_counts(metrics) == {c: rescan.get(c, zeros) for c in range(8)}
+    assert R.read_table(spark, cfg.output_root, "failed_rows").count() == 0
